@@ -20,7 +20,7 @@ from unimib_simpss_spark.operators.sensor_pipeline import (
     sensor_pipeline,
 )
 from unimib_simpss_spark.sources.csv_dim import distinct_groups, read_sensor_group_mapping
-from unimib_simpss_spark.streaming.sinks import upsert_keyed_parquet
+from unimib_simpss_spark.streaming.sinks import read_keyed_parquet, upsert_keyed_parquet
 
 # FIXTURES.md §1 example row + reference sensor_group.csv:1-5 verbatim shape
 RAW_ROWS = [
@@ -155,6 +155,26 @@ def test_upsert_last_writer_wins(spark, dim, tmp_path):
     stored = spark.read.parquet(sink)
     assert stored.count() == 3  # still one row per PK — Cassandra upsert semantics
     assert stored.filter(F.col("sensor_id") == 120).collect()[0].temperature == 999
+
+
+def test_read_handle_survives_a_generation_swap(spark, dim, tmp_path):
+    """A read handle lists its files when created; a swap before its
+    scan must not fail it (FILE_NOT_EXIST) but leave it on the rows of
+    the generation it was created on."""
+    sink = str(tmp_path / "sensor_data")
+    keys = ("sensor_group", "sensor_id", "time_received")
+    ts = F.lit("2024-01-01T12:00:00").cast("timestamp")
+    first, _ = sensor_pipeline(_raw_df(spark), dim, ts_col=ts, on_unknown="fail")
+    upsert_keyed_parquet(first, sink, keys, partition_col="sensor_group")
+    handle = read_keyed_parquet(spark, sink)
+    second, _ = sensor_pipeline(
+        _raw_df(spark, [{**RAW_ROWS[0], "T": 999}]), dim, ts_col=ts, on_unknown="fail"
+    )
+    upsert_keyed_parquet(second, sink, keys, partition_col="sensor_group")
+    rows = {r.sensor_id: r.temperature for r in handle.collect()}
+    assert rows == {r["id"]: r["T"] for r in RAW_ROWS}
+    # a new handle sees the swap
+    assert read_keyed_parquet(spark, sink).where("sensor_id = 120").first().temperature == 999
 
 
 def test_dedup_by_primary_key(spark, dim):

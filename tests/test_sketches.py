@@ -421,6 +421,18 @@ def test_bloom_bits_drops_null_members(spark):
             assert hits[i] == 1, i
 
 
+@pytest.mark.parametrize("bad_pos", [-1, -64, 64])
+def test_bloom_probe_rejects_positions_outside_m(spark, bad_pos):
+    """A bit relation built for another m must fail loudly: a negative
+    position would otherwise alias into the last word (stray hits) and
+    one at or past m would index past the mask."""
+    m = 64
+    bits = spark.createDataFrame([(3,), (bad_pos,)], "pos long")
+    probes = spark.createDataFrame([("a",)], "fp string")
+    with pytest.raises(ValueError, match=r"outside \[0, 64\)"):
+        SK.bloom_probe(bits, probes, "fp", m=m)
+
+
 class TestKLL:
     """KLL quantile sketch (functions/kll.py; VERDICT r9 #7): rank-error
     bound, merge order-insensitivity, determinism, wire roundtrip, and

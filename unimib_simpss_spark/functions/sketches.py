@@ -414,15 +414,28 @@ def bloom_probe(
         bits.select("pos")
         .where(F.col("pos").isNotNull())
         .select(
+            "pos",
             (F.col("pos") / 64).cast("int").alias("w"),
             F.expr("shiftleft(1L, int(pos % 64))").alias("b"),
         )
         .groupBy("w")
-        .agg(F.bit_or("b").alias("bits"))
+        .agg(
+            F.bit_or("b").alias("bits"),
+            F.min("pos").alias("lo"),
+            F.max("pos").alias("hi"),
+        )
         .collect()
     )
     words = [0] * n_words
     for r in packed:
+        # a position outside [0, m) means ``bits`` was built with another
+        # m; indexing would raise, or alias a negative one into the last
+        # word and set stray bits
+        if r["lo"] < 0 or r["hi"] >= m:
+            raise ValueError(
+                f"bloom_probe: bit positions [{r['lo']}, {r['hi']}] fall "
+                f"outside [0, {m}); build the bits with bloom_bits(m={m})"
+            )
         words[r["w"]] = r["bits"]
     # pin the literal's type: a mask whose set words all happen to fit
     # 32 bits would infer array<int>, and getbit on an int rejects bit

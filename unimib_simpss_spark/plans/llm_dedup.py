@@ -1631,7 +1631,7 @@ def q62_corpus_pipeline(
                 # and unlike q02 no consumer needs the finalized
                 # partitioning at plan time — so the 32-way tokenize
                 # overlaps the planning instead of waiting behind it
-                pool.submit(lambda: pre.count())
+                f_fill = pool.submit(pre.count)
                 f_lm = pool.submit(
                     _tracked, _lm_chain,
                     pre.select("doc_id", "source", "toks"), False,
@@ -1641,6 +1641,9 @@ def q62_corpus_pipeline(
                 scored = f_lm.result()
                 docs_q, clusters = f_dd.result()
                 hits = f_dc.result()
+                # read last: a failure of the fill alone must raise too,
+                # not stay stored in an unread future
+                f_fill.result()
     else:
         # single-section ('ppl') run: the chain owns a narrow
         # (doc_id, source, toks) cache and frees it as soon as the

@@ -39,6 +39,17 @@ _DEFAULTS: dict[str, str] = {
     # null-on-bad-cast behavior (missing columns become NULL at the sink,
     # cassandra_storage.py:85-86) and DuckDB-oracle arithmetic parity.
     "spark.sql.ansi.enabled": "false",
+    # Generated-class cache (static: read once per JVM). Spark's default
+    # of 100 entries is smaller than one pass of this engine's hosts: a
+    # repeated plan would find its classes evicted and pay Janino plus
+    # JIT again on every run. Working sets, counted as CodegenMetrics source
+    # compiles in a cold session under an unbounded cache (one entry per
+    # class and class loader), local[4]: one q36+q62+q67 corpus pass at
+    # sf0.01 323; the six-host corpus set (q33 q36 q38 q61 q62 q67) 765;
+    # one bench.py 38-query pass at sf0.1 1553, the largest. 2000 covers
+    # it with headroom for the cache's four independently evicted
+    # segments; a second corpus pass then compiles ~6 classes, not ~330.
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 

@@ -245,7 +245,14 @@ def foreach_batch_upsert(
 
 
 def read_keyed_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Read the generation the table link points at now.
+
+    The link is resolved once, here: a scan through the link itself
+    lists one generation's files and then opens them by path, so a swap
+    landing in between fails the read with FILE_NOT_EXIST. The handle
+    stays on its generation, which survives the next swap (the reader
+    grace generation of :func:`_swap_in_generation`)."""
+    return spark.read.parquet(os.path.realpath(path))
 
 
 # ------------------------------------------------- additive agg sink
